@@ -20,4 +20,9 @@ Layout
 - ``streaming``  : structured-streaming ingest of transcript turns
 """
 
+import logging
+
 __version__ = "0.1.0"
+
+# the package logger: warm-up failures (WARN) and scorer sizing (INFO)
+log = logging.getLogger("document_retrieval_spark")

@@ -37,9 +37,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import log
 from ..config import BM25Config
 from .bm25 import bm25_term_score  # noqa: F401  (doc parity reference)
 from ..operators.codec import delta_decode, vb_decode
+from .plan import DOCPART_MIN_DOCS
 
 _EMPTY_I64 = np.empty(0, dtype=np.int64)
 _EMPTY_F64 = np.empty(0, dtype=np.float64)
@@ -502,8 +504,13 @@ def wand_topk(
     `terms`: optional pre-known distinct term list of the batch (callers that
     hold the query set locally — e.g. scripts/query.py reading a CSV — pass
     it, avoiding any driver-side collect here).
+
+    `n_query_parts`: explicit bucket count of the query-partitioned kernel
+    exchange. Leave it unset: by default the exchange is sized to the
+    batch by `_kernel_parts` (one wave of tasks, never more buckets than
+    queries). Set it only to reproduce a fixed layout, e.g. for an A/B.
     """
-    touched = _touched_segments(
+    touched, n_queries, n_docs = _touched_segments(
         query_terms, postings, coll, bm25, lang_col, terms,
         max_pushdown_terms, term_dict, avgdl
     )
@@ -521,34 +528,17 @@ def wand_topk(
             }
         )
 
-    # Finer-than-default query partitioning: per-query WAND cost is skewed
-    # (a hot-term query touches ~3x the median's postings), and with only
-    # spark.sql.shuffle.partitions buckets the slowest bucket gates the
-    # stage. HashPartitioning on query_id satisfies the groupBy's required
-    # distribution, so this is ONE shuffle, just finer-grained — tasks pack
-    # onto cores as they free up. The default (8x defaultParallelism) is
-    # tuned for at-scale batches where per-task kernel work dwarfs the
-    # ~25 ms per-task Arrow/launch overhead (measured +12% on a 1M-turn
-    # batch, WAND phase 2->8-core speedup 2.4x -> 4.0x); for SMALL corpora
-    # the overhead dominates — pass n_query_parts ~ 2x parallelism there
-    # (measured: 129k-turn batch 4.8-6.2 s at 8x vs 3.8-3.9 s at 2x).
-    if n_query_parts is not None:
-        parted = touched.repartition(n_query_parts, "query_id")
-    elif terms is not None and len(terms) <= 64:
-        # SMALL batch (driver knows the term list — typically one query):
-        # the kernel work is a handful of segments, so scheduling dominates;
-        # a number-pinned repartition would launch par*8 mostly-EMPTY tasks
-        # per call (~hundreds of ms of pure task-launch on a 1-query
-        # latency path). A column-only repartition is an AQE coalesce
-        # target, so the exchange sizes itself to the actual bytes —
-        # one task for one query, which is exactly this layout's latency
-        # model (one core runs the whole query).
-        parted = touched.repartition("query_id")
-    else:
-        parted = touched.repartition(
-            touched.sparkSession.sparkContext.defaultParallelism * 8,
-            "query_id",
+    # One HashPartitioning(query_id) exchange satisfies the groupBy, and
+    # each query is scored whole in one group, so the bucket count changes
+    # only how queries pack into tasks — never an answer. Its explicit
+    # count also keeps AQE from coalescing a small-byte batch into one task.
+    if n_query_parts is None:
+        n_query_parts = _kernel_parts(
+            n_queries, n_docs, touched.sparkSession.sparkContext.defaultParallelism
         )
+        log.info("wand_topk: %d kernel partitions (queries seen: %s, "
+                 "n_docs seen: %s)", n_query_parts, n_queries, n_docs)
+    parted = touched.repartition(n_query_parts, "query_id")
     res = parted.groupBy("query_id").applyInPandas(
         score_group, schema="query_id string, rank int, doc_ord long, score double"
     )
@@ -559,6 +549,51 @@ def wand_topk(
     return doc_map.select("docid", "doc_ord").join(
         F.broadcast(res), "doc_ord"
     ).select("query_id", "rank", "docid", "score")
+
+
+# waves of kernel tasks per core past the corpus size where more, smaller
+# buckets were measured to pay (per-query WAND cost is skewed: a hot-term
+# query touches ~3x the median's postings, so the slowest bucket gates the
+# stage; 8 waves: +12% on a 1M-turn batch, 2->8-core speedup 2.4x -> 4.0x)
+_WAVES_AT_SCALE = 8
+
+
+def _kernel_parts(n_queries: int | None, n_docs: int | None,
+                  parallelism: int) -> int:
+    """Bucket count of wand_topk's query-partitioned kernel exchange.
+
+    Every non-empty bucket is one Python `applyInPandas` task, and a task
+    costs about 0.2-0.4 s before its UDF starts, far more than the kernel
+    work of a small batch (on a 4-core VM, a traced 100-query batch at the
+    old fixed 32 buckets spent 10 s more summed task time than at 4, with
+    the same answers). So:
+
+    - one wave (`parallelism` buckets) below `DOCPART_MIN_DOCS` documents,
+      `_WAVES_AT_SCALE` waves from there on, where per-bucket skew
+      outweighs the per-task cost;
+    - never more buckets than the batch has queries.
+
+    `n_queries`/`n_docs` are None when the call did not read them (an
+    explicit `terms` list skips the term collect, an `avgdl` scalar or a
+    language-routed batch skips the coll read): an unknown corpus size
+    counts as small and an unknown query count caps nothing. Empty buckets
+    start no Python worker, so a one-query call with unknown query count
+    still runs its kernel in one task."""
+    waves = _WAVES_AT_SCALE if (n_docs or 0) >= DOCPART_MIN_DOCS else 1
+    parts = parallelism * waves
+    if n_queries is not None:
+        parts = min(parts, n_queries)
+    return max(1, parts)
+
+
+def _queries_seen(rows: list, max_terms: int) -> int | None:
+    """min(batch queries, cap) from the rows of the probe's distinct-term
+    collect, each carrying up to `cap` of its term's query ids (a term with
+    fewer ids lists all of them, so the union is exact below the cap).
+    None when the collect stopped at its limit."""
+    if len(rows) > max_terms:
+        return None
+    return len({q for r in rows for q in r["qids"]})
 
 
 def _cursors_from_pdf(pdf: pd.DataFrame, bm25: BM25Config, avgdl: float,
@@ -604,7 +639,7 @@ def _touched_segments(
     max_pushdown_terms: int,
     term_dict: DataFrame | None = None,
     avgdl: float | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, int | None, int | None]:
     """Shared probe stage of both WAND layouts: validate the config, prune
     the postings scan to the batch's touched terms, join query terms to
     their segments and attach each query's avgdl.
@@ -615,7 +650,12 @@ def _touched_segments(
     lets the scan prune with `In(term_id, ...)` instead of a string IN:
     int64 parquet column stats/dictionaries are cheaper to evaluate and
     prune better at 10^8-term vocabularies, and the segments join keys on
-    a long instead of a string."""
+    a long instead of a string.
+
+    -> (touched, n_queries, n_docs): the segments, plus what the probe's
+    driver jobs read on the way for `_kernel_parts` — the batch's query
+    count capped at the largest bucket count (None without the term
+    collect) and the corpus size (None without the coll read)."""
     join_keys = ["term"] + ([lang_col] if lang_col else [])
     if not bm25.unique_query_terms:
         # duplicate-term scoring (variants 2-5's literal loops) would count
@@ -638,6 +678,13 @@ def _touched_segments(
         # per latency-path call, measured r6); fold it to one task first
         query_terms = query_terms.coalesce(1)
     query_terms = query_terms.dropDuplicates(["query_id", *join_keys])
+    # up to `cap` query ids ride along with each distinct term of the
+    # prune collect below, so wand_topk sizes its kernel exchange to the
+    # batch without a job of its own (_kernel_parts, _queries_seen)
+    cap = (query_terms.sparkSession.sparkContext.defaultParallelism
+           * _WAVES_AT_SCALE)
+    qids = F.slice(F.collect_set("query_id"), 1, cap).alias("qids")
+    n_queries = None
     if term_dict is not None and "term_id" in postings.columns:
         # ID-PUSHDOWN PATH (dict-mode index): translate the batch through
         # the broadcast dictionary (inner join == the OOV-drop semantics
@@ -649,13 +696,10 @@ def _touched_segments(
         qt_id = query_terms.join(
             F.broadcast(term_dict.select(*dict_cols)), join_keys
         )
-        ids = [
-            r["term_id"]
-            for r in qt_id.select("term_id")
-            .distinct()
-            .limit(max_pushdown_terms + 1)
-            .collect()
-        ]
+        rows = (qt_id.groupBy("term_id").agg(qids)
+                .limit(max_pushdown_terms + 1).collect())
+        n_queries = _queries_seen(rows, max_pushdown_terms)
+        ids = [r["term_id"] for r in rows]
         if len(ids) <= max_pushdown_terms:
             postings = postings.filter(F.col("term_id").isin(ids))
         else:
@@ -665,42 +709,31 @@ def _touched_segments(
             )
         id_keys = ["term_id"] + ([lang_col] if lang_col else [])
         touched = postings.drop("term").join(F.broadcast(qt_id), id_keys)
-        if lang_col:
-            touched = touched.join(
-                F.broadcast(coll.select(lang_col, "avgdl")), lang_col
-            )
-            avgdl_col = F.col("avgdl")
-        else:
-            if avgdl is None:
-                avgdl = float(coll.select("avgdl").first()["avgdl"])
-            avgdl_col = F.lit(float(avgdl))
-        return touched.select(
-            "query_id", "term", "idf", "first_ord", "last_ord", "max_q",
-            "blocks", avgdl_col.alias("_avgdl"),
-        )
-    # Explicit IN-filter on the touched terms BEFORE the join: against a
-    # persisted index this becomes a parquet PushedFilter (only touched
-    # shards/row-groups are read — the "load only that language's model"
-    # routing of `final_implementation.py:320-326`, generalized to terms).
-    # The distinct term list of a query batch is small by construction
-    # (2k queries x <=6 terms); the driver collect is bounded by limit().
-    if terms is None:
-        terms = [
-            r["term"]
-            for r in query_terms.select("term")
-            .distinct()
-            .limit(max_pushdown_terms + 1)
-            .collect()
-        ]
-    if len(terms) <= max_pushdown_terms:
-        postings = postings.filter(F.col("term").isin(list(terms)))
     else:
-        # huge batch: broadcast semi-join prune instead of a 50k-literal IN
-        # (no parquet pushdown, but still reads/joins only touched terms)
-        postings = postings.join(
-            F.broadcast(query_terms.select("term").distinct()), "term", "leftsemi"
-        )
-    touched = postings.join(F.broadcast(query_terms), join_keys)
+        # Explicit IN-filter on the touched terms BEFORE the join: against
+        # a persisted index this becomes a parquet PushedFilter (only
+        # touched shards/row-groups are read — the "load only that
+        # language's model" routing of `final_implementation.py:320-326`,
+        # generalized to terms). The distinct term list of a query batch
+        # is small by construction (2k queries x <=6 terms); the driver
+        # collect is bounded by limit().
+        if terms is None:
+            rows = (query_terms.groupBy("term").agg(qids)
+                    .limit(max_pushdown_terms + 1).collect())
+            n_queries = _queries_seen(rows, max_pushdown_terms)
+            terms = [r["term"] for r in rows]
+        if len(terms) <= max_pushdown_terms:
+            postings = postings.filter(F.col("term").isin(list(terms)))
+        else:
+            # huge batch: broadcast semi-join prune instead of a 50k-literal
+            # IN (no parquet pushdown, but still reads/joins only touched
+            # terms)
+            postings = postings.join(
+                F.broadcast(query_terms.select("term").distinct()), "term",
+                "leftsemi",
+            )
+        touched = postings.join(F.broadcast(query_terms), join_keys)
+    n_docs = None
     if lang_col:
         touched = touched.join(
             F.broadcast(coll.select(lang_col, "avgdl")), lang_col
@@ -710,12 +743,14 @@ def _touched_segments(
         # callers that already hold the collection stats pass the scalar —
         # one fewer driver job of fixed floor per batch
         if avgdl is None:
-            avgdl = float(coll.select("avgdl").first()["avgdl"])
+            row = coll.select("n_docs", "avgdl").first()
+            avgdl, n_docs = float(row["avgdl"]), int(row["n_docs"])
         avgdl_col = F.lit(float(avgdl))
-    return touched.select(
+    touched = touched.select(
         "query_id", "term", "idf", "first_ord", "last_ord", "max_q", "blocks",
         avgdl_col.alias("_avgdl"),
     )
+    return touched, n_queries, n_docs
 
 
 def wand_topk_docpart(
@@ -765,7 +800,7 @@ def wand_topk_docpart(
             f"model; coll carries partition column(s) {extra} — use "
             "wand_topk with lang_col for a language-partitioned index"
         )
-    touched = _touched_segments(
+    touched, _, _ = _touched_segments(
         query_terms, postings, coll, bm25, None, terms, max_pushdown_terms,
         term_dict, avgdl
     )

@@ -99,7 +99,7 @@ def test_pushed_filter_reaches_parquet_scan(spark, dict_index, queries_df):
     tdict = dict_index.term_stats.select("term", "term_id")
     from document_retrieval_spark.query.wand import _touched_segments
 
-    touched = _touched_segments(
+    touched, _, _ = _touched_segments(
         qt, dict_index.postings, dict_index.coll, BM25, None, None, 50_000,
         tdict,
     )

@@ -49,8 +49,12 @@ def built(spark, transcripts_df):
 
 
 def _collect_topk(df):
+    return _by_query(df.collect())
+
+
+def _by_query(rows):
     out = {}
-    for r in df.collect():
+    for r in rows:
         out.setdefault(r["query_id"], []).append((r["rank"], r["docid"], r["score"]))
     return {q: [(d, s) for _, d, s in sorted(v)] for q, v in out.items()}
 
@@ -214,3 +218,181 @@ def test_docpart_refuses_lang_partitioned_coll(built, queries_df):
     two_row = coll.unionByName(coll)
     with pytest.raises(ValueError, match="2 rows"):
         wand_topk_docpart(qt, postings, docs_ord, two_row, bm25, k=K)
+
+
+# ---- kernel-exchange sizing ------------------------------------------------
+
+
+def _shared_vocab_batch(transcripts_pdf, n_queries, n_words, seed):
+    """n_queries queries of 2-3 words drawn from the n_words most frequent
+    corpus words (the hot, salted terms of the `built` index) -> (query
+    pdf, the batch's distinct terms)."""
+    from collections import Counter
+
+    import numpy as np
+    import pandas as pd
+
+    from document_retrieval_spark.oracle.bm25 import oracle_tokenize
+
+    counts, word_of = Counter(), {}
+    for text in transcripts_pdf["text"]:
+        for w in text.split():
+            toks = oracle_tokenize(w, REFERENCE_PROFILE)
+            if len(toks) == 1:
+                counts[toks[0]] += 1
+                word_of.setdefault(toks[0], w)
+    hot = [t for t, _ in counts.most_common(n_words)]
+    rng = np.random.default_rng(seed)
+    queries = [
+        " ".join(word_of[t] for t in rng.choice(
+            hot, size=int(rng.integers(2, 4)), replace=False))
+        for _ in range(n_queries)
+    ]
+    pdf = pd.DataFrame({"query_id": [f"s{i:03d}" for i in range(n_queries)],
+                        "query": queries})
+    terms = sorted({t for q in queries
+                    for t in oracle_tokenize(q, REFERENCE_PROFILE)})
+    return pdf, terms
+
+
+def _assert_matches_oracle(got, oracle_index, pdf, bm25):
+    for _, row in pdf.iterrows():
+        want = oracle_topk(oracle_index, row["query"], REFERENCE_PROFILE,
+                           bm25, k=K)
+        g = got.get(row["query_id"], [])
+        assert len(g) == len(want), row["query_id"]
+        for (_, gs), (_, ws) in zip(g, want):
+            assert math.isclose(gs, ws, rel_tol=1e-6, abs_tol=1e-9), row["query_id"]
+        if want:  # above the boundary tie group the members must agree
+            cut = want[-1][1] + 1e-9
+            assert ({d for d, s in g if s > cut}
+                    == {d for d, s in want if s > cut}), row["query_id"]
+
+
+def _kernel_stage(spark, group):
+    """(tasks, tasks that received rows) of the one applyInPandas kernel
+    stage run under job group `group`: the task count from the status
+    tracker, the stage found by its FlatMapGroupsInPandas operator and the
+    fed tasks by their shuffle-read records in the status store."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    graph = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph
+    stage_ids = {sid for jid in tracker.getJobIdsForGroup(group)
+                 for sid in tracker.getJobInfo(jid).stageIds}
+    found = []
+    for sid in sorted(stage_ids):
+        info = tracker.getStageInfo(sid)
+        if info is None or info.numCompletedTasks == 0:
+            continue  # skipped: its output was reused from an earlier job
+        dot = graph.makeDotFile(store.operationGraphForStage(sid))
+        if "FlatMapGroupsInPandas" not in dot:
+            continue
+        tasks = store.taskList(sid, info.currentAttemptId, 1_000_000)
+        fed = sum(
+            1 for i in range(tasks.size())
+            if tasks.apply(i).taskMetrics().get().shuffleReadMetrics()
+            .recordsRead() > 0
+        )
+        found.append((info.numTasks, fed))
+    assert len(found) == 1, found
+    return found[0]
+
+
+def _run_in_group(spark, group, df):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        return df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_kernel_parts_rule():
+    """One wave below the measured crossover, eight waves past it, never
+    more buckets than queries; an unknown count caps nothing and an
+    unknown corpus counts as small."""
+    from document_retrieval_spark.query.plan import DOCPART_MIN_DOCS
+    from document_retrieval_spark.query.wand import _kernel_parts
+
+    assert _kernel_parts(200, 1_000, 4) == 4
+    assert _kernel_parts(200, DOCPART_MIN_DOCS, 4) == 32
+    assert _kernel_parts(3, DOCPART_MIN_DOCS, 4) == 3
+    assert _kernel_parts(1, None, 4) == 1
+    assert _kernel_parts(None, None, 4) == 4
+    assert _kernel_parts(None, 10**12, 4) == 32
+    assert _kernel_parts(0, 1_000, 4) == 1  # all-OOV batch
+
+
+def test_queries_seen_from_capped_id_lists():
+    from document_retrieval_spark.query.wand import _queries_seen
+
+    rows = [{"qids": ["a", "b"]}, {"qids": ["b", "c"]}, {"qids": ["a"]}]
+    assert _queries_seen(rows, max_terms=3) == 3
+    assert _queries_seen(rows, max_terms=2) is None  # collect hit its limit
+    assert _queries_seen([], max_terms=5) == 0
+
+
+def test_small_vocab_batch_fills_one_wave(
+    spark, built, transcripts_pdf, oracle_index
+):
+    """A 200-query batch over <= 64 shared terms, with the term list passed,
+    must spread its kernel over at least min(queries, parallelism) tasks
+    (an AQE-coalesced exchange would put it in one), with oracle answers."""
+    docs, docs_ord, tf, coll, stats, postings = built
+    bm25 = BM25Config()
+    pdf, terms = _shared_vocab_batch(transcripts_pdf, 200, 40, seed=11)
+    assert len(terms) <= 64
+    qt = prepare_query_terms(spark.createDataFrame(pdf), REFERENCE_PROFILE, bm25)
+    rows = _run_in_group(spark, "wand-small-vocab", wand_topk(
+        qt, postings, docs_ord, coll, bm25, k=K, terms=terms))
+    n_tasks, fed = _kernel_stage(spark, "wand-small-vocab")
+    par = spark.sparkContext.defaultParallelism
+    assert n_tasks >= min(len(pdf), par), n_tasks
+    assert fed >= 2, fed  # the batch really spread, not one fat task
+    _assert_matches_oracle(_by_query(rows), oracle_index, pdf, bm25)
+
+
+def test_one_query_kernel_runs_in_one_task(
+    spark, built, transcripts_pdf, oracle_index
+):
+    """A one-query call with the term list passed keeps its latency shape:
+    the whole query is scored in one kernel task, at most one wave of
+    (empty) buckets around it."""
+    docs, docs_ord, tf, coll, stats, postings = built
+    bm25 = BM25Config()
+    pdf, terms = _shared_vocab_batch(transcripts_pdf, 1, 40, seed=12)
+    qt = prepare_query_terms(spark.createDataFrame(pdf), REFERENCE_PROFILE, bm25)
+    rows = _run_in_group(spark, "wand-one-query", wand_topk(
+        qt, postings, docs_ord, coll, bm25, k=K, terms=terms))
+    n_tasks, fed = _kernel_stage(spark, "wand-one-query")
+    assert fed == 1
+    assert n_tasks <= spark.sparkContext.defaultParallelism
+    _assert_matches_oracle(_by_query(rows), oracle_index, pdf, bm25)
+
+
+def test_answers_invariant_to_kernel_partitioning(
+    spark, built, transcripts_pdf
+):
+    """The bucket count only packs whole queries into tasks: the default
+    and 1, parallelism and 8 x parallelism buckets give bit-identical
+    docids, ranks and scores on a batch that shares hot terms."""
+    docs, docs_ord, tf, coll, stats, postings = built
+    bm25 = BM25Config()
+    pdf, _ = _shared_vocab_batch(transcripts_pdf, 60, 12, seed=13)
+    qt = prepare_query_terms(spark.createDataFrame(pdf), REFERENCE_PROFILE, bm25)
+    par = spark.sparkContext.defaultParallelism
+
+    def run(n_query_parts):
+        return sorted(
+            (r["query_id"], r["rank"], r["docid"], r["score"])
+            for r in wand_topk(qt, postings, docs_ord, coll, bm25, k=K,
+                               n_query_parts=n_query_parts).collect()
+        )
+
+    base = run(None)
+    assert len(base) > 0
+    for n in (1, par, 8 * par):
+        assert run(n) == base, n
+
